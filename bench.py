@@ -287,11 +287,15 @@ def _bench_fns():
     return REGISTRY, bench_only
 
 
-def _time_queries(names: list[str], sf_dir: str) -> dict[str, float]:
+def _time_queries(
+    names: list[str], sf_dir: str
+) -> tuple[dict[str, float], float, int, dict[str, float]]:
     """Time a list of queries in THIS process's Spark session with the
     honest instrument (full materialization via tools/harness_util).
     Under the default per-query isolation the list has one element and
-    the JVM is fresh; under SPARK_GRAFT_BENCH_BATCH=N it has up to N."""
+    the JVM is fresh; under SPARK_GRAFT_BENCH_BATCH=N it has up to N.
+    Returns (median seconds per query, worst steal fraction, retakes,
+    queries that kept a steal-poisoned sample -> their worst steal)."""
     os.environ.setdefault(
         "PYSPARK_SUBMIT_ARGS",
         "--conf spark.ui.showConsoleProgress=false pyspark-shell",

@@ -14,8 +14,13 @@ Reference endpoints -> methods:
 - kNN search           (A15) -> .search(query, k) -> DataFrame
 
 State:
-- chunk index: a DataFrame (persist via plans.index_build.write_index)
-- semantic LFU cache (A12-A14): a DataFrame maintained by operators.cache
+- chunk index: a DataFrame (persist via plans.index_build.write_index);
+  retrieval over it is a Spark plan
+- query embedding (A6) and semantic LFU cache (A12-A14): on the driver,
+  so a cache-hit ask runs no Spark job.  Both are per-ask work on one
+  text and <= capacity entries, and the reference scans its cache
+  client-side too (app/main.py:67-128); as Spark jobs over 1-row
+  frames they cost ~1.9 s per cache hit on 4 cores.
 - conversation memory (A21): per-chat in-process buffer, like the
   reference's dict — but INITIALIZED (the reference's memory_store is
   never created in __init__, /root/reference/app/main.py:408-411 vs
@@ -34,9 +39,7 @@ from .functions.vectors import cosine, vector_lit
 from .ml.embedder import TfIdfEmbedder
 from .operators import cache as cache_ops
 from .operators.chunking import chunk_documents
-from .operators.retrieval import topk_similar
 from .plans.rag import SYSTEM_RULES
-from .functions.plan import truncate_eager
 
 DEFAULT_TOP_K = 3  # /root/reference/app/main.py:467
 
@@ -68,12 +71,9 @@ class SemanticQueryEngine:
         # delta loop, app/main.py:638-643) plugs in here; None falls
         # back to word-chunking the completed answer
         self.generate_stream = generate_stream_fn
-        self.cache_capacity = cache_capacity
-        self.cache_threshold = cache_threshold
         self.index: Optional[DataFrame] = None
         self._embedder: Optional[TfIdfEmbedder] = None
-        self._cache: Optional[DataFrame] = None
-        self._cache_seq = 0
+        self._cache = cache_ops.SemanticCache(cache_capacity, cache_threshold)
         # A21 — initialized, unlike the reference (app/main.py:408-411)
         self.memory_store: dict[str, list[tuple[str, str]]] = {}
 
@@ -129,6 +129,10 @@ class SemanticQueryEngine:
             "user_id", F.lit(user_id)
         )
         base = self.index
+        if base is not None and dict(base.dtypes)["doc_id"] != "string":
+            # upload ids are strings; unionByName would cast them to the
+            # index's type instead (CAST_INVALID_INPUT on the next read)
+            base = base.withColumn("doc_id", F.col("doc_id").cast("string"))
         self.index = (
             embedded
             if base is None
@@ -146,13 +150,11 @@ class SemanticQueryEngine:
         return self.index
 
     def _embed_query(self, query: str) -> list[float]:
-        """A6: embed one query through the same model; empty -> zeros
-        (/root/reference/app/main.py:172-180)."""
+        """A6: embed one query through the same model, on the driver;
+        empty -> zeros (reference app/main.py:172-180)."""
         if not query or not query.strip():
             return [0.0] * self.dim
-        one = self.spark.createDataFrame([(query,)], "chunk_text string")
-        row = self._embedder.transform(one).select("embedding").head()
-        return [float(x) for x in row.embedding]
+        return self._embedder.embed_text(query)
 
     def search(self, query: str, k: int = DEFAULT_TOP_K) -> DataFrame:
         """A15: top-k chunks for a text query."""
@@ -191,34 +193,11 @@ class SemanticQueryEngine:
     def _cache_probe(self, qvec: list[float]) -> Optional[str]:
         """A12: top-1 cosine over cache entries >= threshold; bumps freq
         on hit."""
-        if self._cache is None:
-            return None
-        hit = cache_ops.probe(self._cache, qvec, self.cache_threshold).collect()
-        if not hit:
-            return None
-        self._cache = cache_ops.bump_freq(self._cache, hit[0].entry_id)
-        return hit[0].response
+        return self._cache.probe(qvec)
 
     def _cache_put(self, qvec: list[float], response: str) -> None:
         """A14: insert with freq=1, LFU-evicting at capacity."""
-        self._cache_seq += 1
-        entry = self.spark.createDataFrame(
-            [(self._cache_seq, qvec, response, 1, self._cache_seq)],
-            "entry_id long, embedding array<double>, response string, "
-            "freq long, insert_seq long",
-        )
-        if self._cache is None:
-            self._cache = entry
-        else:
-            self._cache = cache_ops.put(self._cache, entry, self.cache_capacity)
-        # Each probe/put chains another column rewrite onto the cache
-        # plan; unchecked, lineage grows per interaction and every probe
-        # replays the whole rewrite history.  Truncate it periodically —
-        # the same pattern operators/graph.py uses for its loop.  The
-        # cache is capacity-bounded (<= `cache_capacity` rows) so the
-        # materialization is tiny.
-        if self._cache_seq % 16 == 0:
-            self._cache = self._cache.transform(truncate_eager)
+        self._cache.put(qvec, response)
 
     def ask(
         self, query: str, chat_id: Optional[str] = None, top_k: int = DEFAULT_TOP_K
@@ -286,7 +265,4 @@ class SemanticQueryEngine:
     # ------------------------------------------------------------------
 
     def cache_stats(self) -> dict:
-        if self._cache is None:
-            return {"entries": 0}
-        rows = self._cache.select("entry_id", "freq").collect()
-        return {"entries": len(rows), "total_hits": sum(r.freq for r in rows)}
+        return self._cache.stats()

@@ -129,38 +129,31 @@ def with_cosine(
     Values are bit-identical to cosine(): same guard, same operation
     order, norms evaluated by the same l2_norm tree."""
     dot_tmp = f"__{out}_dot"
+    temps = {dot_tmp: dot(a, b)}  # temp column name -> expression
+    norms = []
+    for side, vec, norm in (("a", a, norm_a), ("b", b, norm_b)):
+        if norm is None:
+            norm = f"__{out}_norm_{side}"
+            temps[norm] = l2_norm(vec)
+        norms.append(_col(norm))
     # the temp names collide with df.select('*', ...) below if the input
     # already carries them (e.g. two nested with_cosine calls with the
     # same `out`) — fail loudly at plan-build time instead of with an
-    # ambiguous-column analyzer error downstream (ADVICE r14)
-    taken = set(df.columns)
-    for tmp in (dot_tmp, f"__{out}_norm_a", f"__{out}_norm_b"):
-        if tmp in taken:
-            raise ValueError(
-                f"with_cosine temp column {tmp!r} already exists in the "
-                f"input; pick a different `out` name"
-            )
-    proj = [dot(a, b).alias(dot_tmp)]
-    drops = [dot_tmp]
-    if norm_a is None:
-        na_tmp = f"__{out}_norm_a"
-        proj.append(l2_norm(a).alias(na_tmp))
-        na_col: ColumnOrName = na_tmp
-        drops.append(na_tmp)
-    else:
-        na_col = norm_a
-    if norm_b is None:
-        nb_tmp = f"__{out}_norm_b"
-        proj.append(l2_norm(b).alias(nb_tmp))
-        nb_col: ColumnOrName = nb_tmp
-        drops.append(nb_tmp)
-    else:
-        nb_col = norm_b
-    na_c, nb_c = _col(na_col), _col(nb_col)
+    # ambiguous-column analyzer error downstream.  Only the
+    # temps this call creates count: a caller-passed norm column is
+    # meant to be in the input.
+    clash = sorted(set(temps) & set(df.columns))
+    if clash:
+        raise ValueError(
+            f"with_cosine temp column {clash[0]!r} already exists in the "
+            f"input; pick a different `out` name"
+        )
+    na_c, nb_c = norms
     sim = F.when(
         (na_c == F.lit(0.0)) | (nb_c == F.lit(0.0)), F.lit(0.0)
     ).otherwise(F.col(dot_tmp) / (na_c * nb_c))
-    return df.select("*", *proj).withColumn(out, sim).drop(*drops)
+    proj = [c.alias(name) for name, c in temps.items()]
+    return df.select("*", *proj).withColumn(out, sim).drop(*temps)
 
 
 def l2_normalize(a: ColumnOrName, eps: float = 1e-9) -> Column:

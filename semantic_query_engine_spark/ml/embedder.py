@@ -22,14 +22,19 @@ L2-normalizable array<double>.
 
 from __future__ import annotations
 
+import functools
+import re
 from collections.abc import Callable, Iterator
 from typing import Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_DIM = 64  # fixture dim; the reference uses 1024 (app/main.py:38)
+# Java's `\s` (MLlib Tokenizer splits on it), narrower than Python's
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]")
 
 
 class TfIdfEmbedder:
@@ -55,6 +60,15 @@ class TfIdfEmbedder:
             ]
         )
         self._model = pipe.fit(docs.select(self.text_col))
+        hashing_tf, idf_model = self._model.stages[1:]
+        # driver-side embed_text state: the IDF weights, and the JVM
+        # HashingTF's own term -> index hash (0.3 ms per py4j call;
+        # the public indexOf re-sends every param, ~3.5 ms)
+        self._idf = idf_model.idf.toArray()
+        hashing_tf._transfer_params_to_java()
+        self._index_of = functools.lru_cache(maxsize=1 << 16)(
+            hashing_tf._java_obj.indexOf
+        )
         return self
 
     def transform(self, docs: DataFrame) -> DataFrame:
@@ -67,6 +81,22 @@ class TfIdfEmbedder:
         return out.withColumn(self.out_col, vector_to_array(F.col("__tfidf"))).drop(
             "__tokens", "__tf", "__tfidf"
         )
+
+    def embed_text(self, text: str) -> list[float]:
+        """One text's embedding computed on the driver, bit-identical to
+        `transform`'s and with no Spark job: Tokenizer's rule
+        (lowercase, split on Java `\\s`, drop trailing empty tokens),
+        term counts at the fitted HashingTF's indices, times the IDF."""
+        if self._model is None:
+            raise RuntimeError("call fit() first")
+        tokens = _JAVA_WS.split(text.lower())
+        if len(tokens) > 1:  # a separator matched: Java drops trailing ""
+            while tokens and tokens[-1] == "":
+                tokens.pop()
+        tf = np.zeros(self.dim)
+        for t in tokens:
+            tf[self._index_of(t)] += 1.0
+        return (tf * self._idf).tolist()
 
 
 def embed_with_pandas_udf(

@@ -1,90 +1,107 @@
-"""Semantic LFU cache as a managed table + deterministic batch jobs.
+"""Semantic LFU cache, held on the driver (SURVEY A12-A14).
 
 The reference keeps <=1000 {embedding, response, freq} entries in a Redis
 list, does a client-side linear cosine scan with hit threshold 0.96,
 bumps freq on hit, and evicts the first minimum-freq entry at capacity
-(/root/reference/app/main.py:42-44,67-128, SURVEY A12-A14).
+(reference app/main.py:42-44,67-128).
 
-Spark-native: the cache is a small DataFrame (at rest: one parquet
-table); probe / bump / evict / put are declarative plans.  The LFU
-tie-break is made deterministic via (freq, insert_seq) ordering —
-the reference's "first minimum in list order" is list-position-dependent
-(/root/reference/app/main.py:107-114); insert_seq is its stable analog.
+The cache is per-ask serving state bounded by its capacity, so it lives
+where the reference scans it: in the client, here the Spark driver, as a
+NumPy matrix.  As a DataFrame (a union of 1-row frames) every ask would
+pay Spark jobs over <= capacity rows (~1.1 s per probe on 4 cores) and
+every probe and put would grow its lineage.  Retrieval over the chunk
+index, which does need the data, stays a Spark plan.
 
-Schema: (entry_id long, embedding array<double>, response string,
-         freq long, insert_seq long)
+Scores are bit-identical to functions.vectors.cosine: dot products and
+norms are left folds (cumsum) in the order of Spark's `aggregate`, with
+the same zero-norm guard.  Entry ids are assigned in insertion order, so
+an entry's id is also its insert_seq: the LFU tie-break is made
+deterministic via (freq, insert_seq) ordering — the reference's "first
+minimum in list order" is list-position-dependent
+(reference app/main.py:107-114).  `eviction_candidate` is the
+same rule as a plan over a cache table.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Optional
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .retrieval import threshold_probe
 
 CACHE_CAPACITY = 1000  # /root/reference/app/main.py:42
 CACHE_SIM_THRESHOLD = 0.96  # /root/reference/app/main.py:44
 
 
-def probe(
-    cache: DataFrame,
-    query_vec: Iterable[float],
-    threshold: float = CACHE_SIM_THRESHOLD,
-) -> DataFrame:
-    """0-or-1-row hit: argmax cosine over entries, floored at threshold
-    (SURVEY A12)."""
-    return threshold_probe(
-        cache,
-        query_vec,
-        threshold,
-        id_col="entry_id",
-        vec_col="embedding",
-        payload_col="response",
-    )
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise a.b summed left to right, as Spark's aggregate does."""
+    return np.cumsum(a * b, axis=-1)[..., -1]
 
 
-def bump_freq(cache: DataFrame, entry_id: int) -> DataFrame:
-    """freq+1 for the hit entry (/root/reference/app/main.py:92-96) as a
-    columnar rewrite — the MERGE-style update of a tiny managed table."""
-    return cache.withColumn(
-        "freq",
-        F.when(F.col("entry_id") == F.lit(entry_id), F.col("freq") + 1).otherwise(
-            F.col("freq")
-        ),
-    )
+class SemanticCache:
+    """Capacity-bounded LFU cache of (embedding, response) entries."""
+
+    def __init__(
+        self, capacity: int = CACHE_CAPACITY, threshold: float = CACHE_SIM_THRESHOLD
+    ):
+        if capacity < 1:
+            raise ValueError("cache capacity must be at least 1")
+        self.capacity = capacity
+        self.threshold = threshold
+        self.embedding = np.zeros((0, 0))
+        self.norm = np.zeros(0)
+        self.entry_id = np.zeros(0, dtype=np.int64)
+        self.freq = np.zeros(0, dtype=np.int64)
+        self.response: list[str] = []
+        self._last_id = 0
+
+    def probe(self, query_vec: Iterable[float]) -> Optional[str]:
+        """Top-1 cosine over entries if >= threshold, ties to the lowest
+        entry_id; bumps the hit's freq (reference app/main.py:67-98)."""
+        if not self.response:
+            return None
+        q = np.asarray(query_vec, dtype=np.float64)
+        qn = np.sqrt(_fold_dot(q, q))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            score = np.where(
+                (self.norm == 0.0) | (qn == 0.0),
+                0.0,
+                _fold_dot(self.embedding, q) / (self.norm * qn),
+            )
+        best = np.flatnonzero(score == score.max())
+        hit = best[np.argmin(self.entry_id[best])]
+        if score[hit] < self.threshold:
+            return None
+        self.freq[hit] += 1
+        return self.response[hit]
+
+    def put(self, query_vec: Iterable[float], response: str) -> None:
+        """Insert with freq=1; at capacity, overwrite the LFU entry, the
+        minimum (freq, insert_seq) (reference app/main.py:121-128)."""
+        vec = np.asarray(query_vec, dtype=np.float64)
+        n = len(self.response)
+        if n < self.capacity:
+            self.embedding = np.vstack([self.embedding, vec]) if n else vec[None, :]
+            self.norm = np.append(self.norm, 0.0)
+            self.entry_id = np.append(self.entry_id, 0)
+            self.freq = np.append(self.freq, 0)
+            self.response.append(response)
+            slot = n
+        else:
+            slot = np.lexsort((self.entry_id, self.freq))[0]
+            self.embedding[slot] = vec
+            self.response[slot] = response
+        self._last_id += 1
+        self.norm[slot] = np.sqrt(_fold_dot(vec, vec))
+        self.entry_id[slot] = self._last_id
+        self.freq[slot] = 1
+
+    def stats(self) -> dict:
+        return {"entries": len(self.response), "total_hits": int(self.freq.sum())}
 
 
 def eviction_candidate(cache: DataFrame) -> DataFrame:
-    """The one row LFU would evict: min freq, ties broken by lowest
-    insert_seq (SURVEY A13)."""
+    """The one row LFU would evict from a cache table: min freq, ties
+    broken by lowest insert_seq (SURVEY A13)."""
     return cache.orderBy(F.asc("freq"), F.asc("insert_seq")).limit(1)
-
-
-def evict_lfu(cache: DataFrame, n: int = 1) -> DataFrame:
-    """Drop the n least-frequent entries (deterministic LFU).  Expressed
-    as a rank-filter rather than an anti-join: one window over a <=1000
-    row table."""
-    # global window over <=CACHE_CAPACITY (1000) rows: the single
-    # partition is intentional and bounded — LFU order is a total order
-    # over the whole cache by definition
-    w = Window.orderBy(F.asc("freq"), F.asc("insert_seq"))
-    return (
-        cache.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") > n)
-        .drop("__r")
-    )
-
-
-def put(
-    cache: DataFrame,
-    entry: DataFrame,
-    capacity: int = CACHE_CAPACITY,
-) -> DataFrame:
-    """Insert a new entry, evicting first if at capacity
-    (/root/reference/app/main.py:121-128, SURVEY A14).  `entry` is a
-    1-row DataFrame with the cache schema and freq=1."""
-    n = cache.count()
-    base = evict_lfu(cache, n - capacity + 1) if n >= capacity else cache
-    return base.unionByName(entry)

@@ -99,3 +99,64 @@ def test_upload_text_validation_and_tenancy(engine):
     assert doc_id == "notes_123"
     indexed = engine.index.filter(F.col("doc_id") == doc_id).collect()
     assert indexed and all(r.user_id == "u1" for r in indexed)
+
+
+TRICKY_TEXTS = [
+    "fast key order sort table",
+    "double  space",
+    "  leading whitespace",
+    "trailing whitespace  ",
+    "tab\tseparated\twords",
+    "new\nline\r\nbreaks",
+    "UPPER Case Words",
+    "naïve café ÜBER straße ΣΑΣ İstanbul",
+    "form\x0bfeed\x0cwords",
+    "no\xa0break space",  # not a Java \s: one token
+    "",
+    " ",
+]
+
+
+def test_embed_text_bit_identical_to_transform(spark, engine):
+    emb = engine._embedder
+    df = spark.createDataFrame([(t,) for t in TRICKY_TEXTS], "chunk_text string")
+    for text, row in zip(TRICKY_TEXTS, emb.transform(df).collect()):
+        assert emb.embed_text(text) == list(row.embedding), repr(text)
+    # the query guard: empty / whitespace-only -> zeros
+    for q in ("", "   ", "\t\n"):
+        assert engine._embed_query(q) == [0.0] * engine.dim
+
+
+def test_cache_hit_ask_and_stats_run_no_spark_job(spark, engine):
+    sc = spark.sparkContext
+    q = "hit path runs on the driver"
+    first = engine.ask(q)
+    try:
+        sc.setJobGroup("cache-hit", "cache-hit ask")
+        assert engine.ask(q) == first
+        engine.cache_stats()
+        sc.setJobGroup("control", "search")
+        engine.search(q).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("cache-hit") == []
+    # the group is observed: the same probe sees the search's jobs
+    assert sc.statusTracker().getJobIdsForGroup("control")
+
+
+def test_upload_into_integer_doc_id_index_is_searchable(spark):
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+
+    docs = spark.createDataFrame(
+        [(i, f"spark query vector join row{i}") for i in range(4)],
+        "doc_id long, text string",
+    )
+    eng = SemanticQueryEngine(spark).build_from_documents(docs)
+    doc_id = eng.upload_text("t0", "probe.txt", "stream window watermark", 1)
+    hits = eng.search("stream window watermark", 1).collect()
+    assert [(h.doc_id, h.chunk_text) for h in hits] == [
+        (doc_id, "stream window watermark")
+    ]
+    assert {r.doc_id for r in eng.index.select("doc_id").collect()} == {
+        "0", "1", "2", "3", doc_id
+    }

@@ -4,8 +4,10 @@ LFU eviction with deterministic tie-break, capacity ceiling."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import types as T
 
+from semantic_query_engine_spark.functions.vectors import cosine
 from semantic_query_engine_spark.operators import cache as C
 
 SCHEMA = T.StructType(
@@ -19,83 +21,89 @@ SCHEMA = T.StructType(
 )
 
 
-def _cache(spark, rows):
-    return spark.createDataFrame(rows, SCHEMA)
+def _cache(entries, capacity=C.CACHE_CAPACITY, threshold=C.CACHE_SIM_THRESHOLD):
+    """A driver cache holding `entries` [(embedding, response)] with
+    entry ids 1.. in list order."""
+    cache = C.SemanticCache(capacity, threshold)
+    for vec, resp in entries:
+        cache.put(vec, resp)
+    return cache
 
 
-def test_probe_hit_and_miss(spark):
-    cache = _cache(
-        spark,
-        [
-            (1, [1.0, 0.0], "resp_a", 2, 1),
-            (2, [0.0, 1.0], "resp_b", 1, 2),
-        ],
-    )
-    hit = C.probe(cache, [1.0, 0.0]).collect()
-    assert len(hit) == 1 and hit[0].response == "resp_a"
-    # orthogonal query: below 0.96 -> miss (reference app/main.py:89-90)
-    miss = C.probe(cache, [0.7, 0.714]).collect()
-    assert miss == []
+def test_probe_hit_and_miss():
+    cache = _cache([([1.0, 0.0], "resp_a"), ([0.0, 1.0], "resp_b")])
+    assert cache.probe([1.0, 0.0]) == "resp_a"
+    # orthogonal-ish query: below 0.96 -> miss (reference app/main.py:89-90)
+    assert cache.probe([0.7, 0.714]) is None
+    assert C.SemanticCache().probe([1.0, 0.0]) is None  # empty cache
 
 
-def test_bump_freq(spark):
-    cache = _cache(spark, [(1, [1.0], "a", 1, 1), (2, [1.0], "b", 5, 2)])
-    out = {r.entry_id: r.freq for r in C.bump_freq(cache, 1).collect()}
-    assert out == {1: 2, 2: 5}
+def test_probe_equal_scores_go_to_lowest_entry_id():
+    # cos = 1.0 exactly for both: [2, 0] is [1, 0] scaled
+    cache = _cache([([2.0, 0.0], "first"), ([1.0, 0.0], "second")])
+    assert cache.probe([1.0, 0.0]) == "first"
+    assert cache.freq.tolist() == [2, 1]
+
+
+def test_probe_zero_norm_scores_zero():
+    cache = _cache([([0.0, 0.0], "zero"), ([1.0, 0.0], "x")], threshold=0.0)
+    # the guard makes every score 0.0 (no NaN): a tie at the threshold,
+    # so the lowest entry_id hits
+    assert cache.probe([0.0, 0.0]) == "zero"
+    assert _cache([([1.0, 0.0], "x")]).probe([0.0, 0.0]) is None
+
+
+def test_probe_scores_equal_spark_cosine_bit_for_bit(spark):
+    rng = np.random.default_rng(7)
+    pairs = [(rng.normal(size=64).tolist(), rng.normal(size=64).tolist()) for _ in range(8)]
+    df = spark.createDataFrame(pairs, "a array<double>, b array<double>")
+    for r in df.select("a", "b", cosine("a", "b").alias("s")).collect():
+        # a threshold of exactly Spark's score hits; one ulp above misses
+        assert _cache([(r.a, "hit")], threshold=r.s).probe(r.b) == "hit"
+        above = np.nextafter(r.s, np.inf)
+        assert _cache([(r.a, "hit")], threshold=above).probe(r.b) is None
+
+
+def test_bump_freq():
+    cache = _cache([([1.0, 0.0], "a"), ([0.0, 1.0], "b")])
+    for _ in range(4):
+        cache.probe([0.0, 1.0])
+    assert dict(zip(cache.entry_id.tolist(), cache.freq.tolist())) == {1: 1, 2: 5}
+    assert cache.stats() == {"entries": 2, "total_hits": 6}
 
 
 def test_evict_lfu_tiebreak(spark):
-    # freq tie between 2 and 3 -> lowest insert_seq goes first
+    # freq tie between b and c -> lowest insert_seq (b) goes first
     cache = _cache(
-        spark,
+        [([1.0, 0.0, 0.0], "a"), ([0.0, 1.0, 0.0], "b"), ([0.0, 0.0, 1.0], "c")],
+        capacity=3,
+    )
+    for _ in range(8):
+        cache.probe([1.0, 0.0, 0.0])
+    cache.put([1.0, 1.0, 0.0], "d")
+    assert sorted(cache.response) == ["a", "c", "d"]
+    # the same rule as a plan over a cache table
+    table = spark.createDataFrame(
         [
             (1, [1.0], "a", 9, 3),
             (2, [1.0], "b", 1, 2),
             (3, [1.0], "c", 1, 1),
         ],
+        SCHEMA,
     )
-    cand = C.eviction_candidate(cache).collect()
+    cand = C.eviction_candidate(table).collect()
     assert cand[0].entry_id == 3
-    left = {r.entry_id for r in C.evict_lfu(cache).collect()}
-    assert left == {1, 2}
 
 
-def test_put_respects_capacity(spark):
-    cache = _cache(spark, [(i, [1.0], f"r{i}", i + 1, i) for i in range(3)])
-    entry = _cache(spark, [(99, [0.5], "new", 1, 100)])
-    out = C.put(cache, entry, capacity=3)
-    rows = {r.entry_id for r in out.collect()}
-    assert rows == {1, 2, 99}  # entry 0 had min freq -> evicted
-    assert out.count() == 3
-
-
-def test_cache_persistence_roundtrip(spark, tmp_path):
-    """The cache as a managed parquet table (the Redis-persistence
-    analog): write -> reload -> probe -> put-with-eviction -> rewrite.
-    State survives process-independent storage like the reference's
-    cache survives service restarts."""
-    path = str(tmp_path / "cache")
-    cache = _cache(
-        spark,
-        [
-            (1, [1.0, 0.0], "resp_a", 2, 1),
-            (2, [0.0, 1.0], "resp_b", 1, 2),
-            (3, [0.6, 0.8], "resp_c", 5, 3),
-        ],
-    )
-    cache.write.mode("overwrite").parquet(path)
-
-    reloaded = spark.read.parquet(path)
-    hit = C.probe(reloaded, [0.6, 0.8]).collect()
-    assert hit and hit[0].response == "resp_c"
-
-    entry = _cache(spark, [(9, [0.5, 0.5], "resp_new", 1, 9)])
-    updated = C.put(C.bump_freq(reloaded, hit[0].entry_id), entry, capacity=3)
-    # capacity 3: entry 2 (min freq) evicted, new entry present
-    # (write to a NEW location: parquet reads are lazy, so overwriting
-    # the file a plan still reads from would corrupt the rewrite)
-    path2 = str(tmp_path / "cache_v2")
-    updated.write.mode("overwrite").parquet(path2)
-    final = {r.entry_id: r.freq for r in spark.read.parquet(path2).collect()}
-    assert set(final) == {1, 3, 9}
-    assert final[3] == 6  # freq bump persisted
+def test_put_respects_capacity():
+    cache = _cache([([float(i == j) for j in range(3)], f"r{i}") for i in range(3)], capacity=3)
+    cache.probe([0.0, 1.0, 0.0])
+    cache.probe([0.0, 0.0, 1.0])
+    cache.probe([0.0, 0.0, 1.0])
+    cache.put([0.5, 0.5, 0.0], "new")
+    # r0 had min freq -> evicted; the new entry takes the next id
+    assert sorted(cache.response) == ["new", "r1", "r2"]
+    assert sorted(cache.entry_id.tolist()) == [2, 3, 4]
+    assert cache.stats()["entries"] == 3
+    assert cache.probe([1.0, 0.0, 0.0]) is None
+    assert cache.probe([0.5, 0.5, 0.0]) == "new"

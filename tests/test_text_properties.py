@@ -7,12 +7,18 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from semantic_query_engine_spark.functions.vectors import cosine, l2_norm, l2_normalize
+from semantic_query_engine_spark.functions.vectors import (
+    cosine,
+    l2_norm,
+    l2_normalize,
+    with_cosine,
+)
 from semantic_query_engine_spark.operators.chunking import chunk_documents
 
 TEXTS = st.lists(
@@ -80,6 +86,21 @@ def test_normalize_and_cosine_guards(spark):
     # zero vector: guarded cosine -> 0.0, normalize stays finite
     assert by_id[2].self_cos == 0.0
     assert by_id[2].unit == 0.0
+
+
+def test_with_cosine_accepts_precomputed_norm_named_like_a_temp(spark):
+    """A caller-passed norm column is not a temp of the call, so its
+    name may match one; a temp the call does create still collides."""
+    df = spark.createDataFrame(
+        [(1, [3.0, 4.0], [3.0, 4.0], 5.0), (2, [1.0, 0.0], [0.0, 0.0], 0.0)],
+        "id long, a array<double>, b array<double>, __score_norm_b double",
+    )
+    out = with_cosine(df, "a", "b", "score", norm_b="__score_norm_b")
+    assert out.columns == df.columns + ["score"]
+    by_id = {r.id: r.score for r in out.collect()}
+    assert abs(by_id[1] - 1.0) < 1e-12 and by_id[2] == 0.0
+    with pytest.raises(ValueError, match="__score_norm_b"):
+        with_cosine(df, "a", "b", "score")
 
 
 def test_overlap_chunking_invariants(spark):

@@ -122,8 +122,6 @@ STREAM_PREFIXES = ("stream_", "session_window")
 # partition clause) in the package — same contract as the plan-level
 # list: every acceptance names the bound on the window's input.
 ALLOWED_SOURCE_UNPART_WINDOW: dict[str, str] = {
-    "operators/cache.py": "LFU evict ranks the cache table, capacity-"
-    "bounded at 1000 rows by cache_put",
     "queries/mlpipeline_q.py": "weighted_sample_es ranks the 50-row "
     "post-LIMIT sample only (plan-level allowlist names the same bound)",
 }
