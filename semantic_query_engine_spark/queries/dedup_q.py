@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import words_of
 from ..operators.dedup import exact_dedup, jaccard_pairs
-from ..sources.fixtures import load_table
+from ..sources.fixtures import build_once, load_table
 from .registry import fmt_doc, register
 from ..functions.plan import truncate_plan, truncate_eager
 
@@ -501,12 +501,6 @@ def ivf_knn_join_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_knn_join(probes, assigned, centroids, k=3, nprobe=2)
 
 
-# sf_dir -> (layout path, centroid parquet path, query vector); the
-# layout is written once per bench process (warmup pays it), so the
-# timed runs below measure ONLY the DPP-pruned probe.
-_IVF_LAYOUT_CACHE: dict[str, tuple[str, str, list[float]]] = {}
-
-
 def ivf_topk_partitioned_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT registered — the bench twin of the write_ivf_index
     cluster-partitioned layout (VERDICT r8 #4).  The measured
@@ -519,18 +513,14 @@ def ivf_topk_partitioned_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     per process (bench warmup); timed runs probe the read-back layout
     only — the 100-TB read path, where each query touches
     ~nprobe/n_clusters of the index files."""
-    import os
-
     from ..operators.ann import (
         build_ivf,
         ivf_topk,
         read_ivf_index,
         write_ivf_index,
     )
-    from ..scratch import scratch_path
 
-    key = os.path.abspath(sf_dir)
-    if key not in _IVF_LAYOUT_CACHE:
+    def build(path):
         emb = _emb_double(spark, sf_dir)
         qvec = [
             float(x)
@@ -539,12 +529,14 @@ def ivf_topk_partitioned_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned, centroids = build_ivf(
             emb.filter(F.col("vec_id") >= 8), n_clusters=8
         )
-        path = scratch_path("ivf_layout_" + key.replace("/", "_"))
         write_ivf_index(assigned, path)
         cpath = path + "_centroids"
         centroids.write.mode("overwrite").parquet(cpath)
-        _IVF_LAYOUT_CACHE[key] = (path, cpath, qvec)
-    path, cpath, qvec = _IVF_LAYOUT_CACHE[key]
+        return path, cpath, qvec
+
+    path, cpath, qvec = build_once(
+        spark, sf_dir, ("embeddings",), "ivf_layout", build
+    )
     return ivf_topk(
         read_ivf_index(spark, path),
         spark.read.parquet(cpath),
@@ -552,12 +544,6 @@ def ivf_topk_partitioned_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         nprobe=2,
     )
-
-
-# sf_dir -> (assigned/codes parquet, centroid parquet, codebooks, qvec);
-# training + encode happen once per bench process (warmup pays them), so
-# the timed runs below measure ONLY the per-query probe.
-_IVFPQ_CACHE: dict[str, tuple[str, str, list, list]] = {}
 
 
 def ivfpq_topk_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,14 +558,10 @@ def ivfpq_topk_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     Build + encode are cached to parquet once per process (the bench
     warmup pays them, same pattern as ivf_topk_partitioned_bench);
     bench.py reports this as `ivfpq_topk_op`."""
-    import os
-
     from ..operators.ann import build_ivf, sample_vectors
     from ..operators.pq import build_pq, ivfpq_topk, pq_encode
-    from ..scratch import scratch_path
 
-    key = os.path.abspath(sf_dir)
-    if key not in _IVFPQ_CACHE:
+    def build(path):
         emb = _emb_double(spark, sf_dir)
         qvec = [
             float(x)
@@ -590,14 +572,16 @@ def ivfpq_topk_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned, centroids = build_ivf(index, n_clusters=8, sample_X=X)
         books = build_pq(index, m=8, k=16, sample_X=X)
         enc = pq_encode(index, books)
-        path = scratch_path("ivfpq_" + key.replace("/", "_"))
         assigned.select("vec_id", "cluster_id").join(enc, "vec_id").write.mode(
             "overwrite"
         ).parquet(path)
         cpath = path + "_centroids"
         centroids.write.mode("overwrite").parquet(cpath)
-        _IVFPQ_CACHE[key] = (path, cpath, books, qvec)
-    path, cpath, books, qvec = _IVFPQ_CACHE[key]
+        return path, cpath, books, qvec
+
+    path, cpath, books, qvec = build_once(
+        spark, sf_dir, ("embeddings",), "ivfpq", build
+    )
     built = spark.read.parquet(path)
     return ivfpq_topk(
         built.select("vec_id", "cluster_id"),
@@ -968,32 +952,31 @@ def ann_ivf_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sf_dir -> persisted IVF-PQ layout over the batch-kNN planted pool
-# (distinct from _IVFPQ_SERVING_CACHE: different plant scheme)
-_IVFPQ_KNN_IDX_CACHE: dict[str, str] = {}
+def _write_ivfpq(index: DataFrame, path: str) -> str:
+    """Train and persist the IVF-PQ serving layout every indexed row
+    probes: n_clusters=8, m=8, k=16, one sample pull feeding both
+    trainers — the build ann_ivfpq_topk runs in-plan, so the indexed
+    rows differ from it ONLY in where the build cost lives."""
+    from ..operators.ann import build_ivf, sample_vectors
+    from ..operators.pq import build_pq, pq_encode, write_ivfpq_index
+
+    X = sample_vectors(index)
+    assigned, centroids = build_ivf(index, n_clusters=8, sample_X=X)
+    books = build_pq(index, m=8, k=16, sample_X=X)
+    write_ivfpq_index(assigned, pq_encode(index, books), centroids, books, path)
+    return path
 
 
 def _ensure_ivfpq_knn_index(spark: SparkSession, sf_dir: str):
-    """Build-once/probe-many layout over the batch-kNN pool — same
-    parameters as the single-query serving index (n_clusters=8, m=8,
-    k=16, shared sample pull)."""
-    import os
+    """Serving layout over the batch-kNN planted pool (a different plant
+    scheme from _ensure_ivfpq_serving_index's)."""
+    from ..operators.pq import read_ivfpq_index
 
-    from ..operators.ann import build_ivf, sample_vectors
-    from ..operators.pq import build_pq, pq_encode, read_ivfpq_index, write_ivfpq_index
-    from ..scratch import scratch_path
-
-    key = os.path.abspath(sf_dir)
-    if key not in _IVFPQ_KNN_IDX_CACHE:
-        _, index = _planted_knn_pool(spark, sf_dir)
-        X = sample_vectors(index)
-        assigned, centroids = build_ivf(index, n_clusters=8, sample_X=X)
-        books = build_pq(index, m=8, k=16, sample_X=X)
-        enc = pq_encode(index, books)
-        path = scratch_path("ivfpq_knn_" + key.replace("/", "_"))
-        write_ivfpq_index(assigned, enc, centroids, books, path)
-        _IVFPQ_KNN_IDX_CACHE[key] = path
-    return read_ivfpq_index(spark, _IVFPQ_KNN_IDX_CACHE[key])
+    path = build_once(
+        spark, sf_dir, ("embeddings",), "ivfpq_knn",
+        lambda p: _write_ivfpq(_planted_knn_pool(spark, sf_dir)[1], p),
+    )
+    return read_ivfpq_index(spark, path)
 
 
 @register("ann_ivfpq_knn_join_indexed", oracle=_ANN_KNN_ORACLE)
@@ -1309,37 +1292,15 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _checked_ann_topk(index, qvec, approx)
 
 
-# sf_dir -> persisted IVF-PQ serving-layout path; the build (k-means +
-# PQ training + encode + partitionBy(cluster_id) write) happens ONCE
-# per process — a gate/bench warmup pays it — and every subsequent call
-# is probe-only, the build-once/serve-many cost model of the
-# reference's HNSW index (/root/reference/app/main.py:262-283).
-_IVFPQ_SERVING_CACHE: dict[str, str] = {}
-
-
 def _ensure_ivfpq_serving_index(spark: SparkSession, sf_dir: str):
-    """Build-and-persist (first call) or read back (every other call)
-    the IVF-PQ serving layout over the planted index — SAME build
-    parameters as ann_ivfpq_topk (n_clusters=8, m=8, k=16, one shared
-    sample pull), so the two rows differ ONLY in where the build cost
-    lives."""
-    import os
+    """Serving layout over ann_ivfpq_topk's planted index."""
+    from ..operators.pq import read_ivfpq_index
 
-    from ..operators.ann import build_ivf, sample_vectors
-    from ..operators.pq import build_pq, pq_encode, read_ivfpq_index, write_ivfpq_index
-    from ..scratch import scratch_path
-
-    key = os.path.abspath(sf_dir)
-    if key not in _IVFPQ_SERVING_CACHE:
-        index, _ = _planted_query_index(spark, sf_dir)
-        X = sample_vectors(index)
-        assigned, centroids = build_ivf(index, n_clusters=8, sample_X=X)
-        books = build_pq(index, m=8, k=16, sample_X=X)
-        enc = pq_encode(index, books)
-        path = scratch_path("ivfpq_serving_" + key.replace("/", "_"))
-        write_ivfpq_index(assigned, enc, centroids, books, path)
-        _IVFPQ_SERVING_CACHE[key] = path
-    return read_ivfpq_index(spark, _IVFPQ_SERVING_CACHE[key])
+    path = build_once(
+        spark, sf_dir, ("embeddings",), "ivfpq_serving",
+        lambda p: _write_ivfpq(_planted_query_index(spark, sf_dir)[0], p),
+    )
+    return read_ivfpq_index(spark, path)
 
 
 @register("ann_ivfpq_topk_indexed", oracle=_ANN_TOPK_ORACLE)
@@ -1389,9 +1350,6 @@ def ivfpq_indexed_probe_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFPQ_APPEND_CACHE: dict[str, str] = {}
-
-
 def _ensure_ivfpq_append_index(spark: SparkSession, sf_dir: str):
     """Serving layout trained on the BASE corpus only (NO plants in the
     training set or the initial code table), then the 3 planted
@@ -1402,31 +1360,16 @@ def _ensure_ivfpq_append_index(spark: SparkSession, sf_dir: str):
     certifies the whole append path: encode-with-frozen-codebooks,
     nearest-existing-centroid assignment, and the mode('append')
     partitioned write all have to land for the probe to find them."""
-    import os
+    from ..operators.pq import append_ivfpq_index, read_ivfpq_index
 
-    from ..operators.ann import build_ivf, sample_vectors
-    from ..operators.pq import (
-        append_ivfpq_index,
-        build_pq,
-        pq_encode,
-        read_ivfpq_index,
-        write_ivfpq_index,
-    )
-    from ..scratch import scratch_path
-
-    key = os.path.abspath(sf_dir)
-    if key not in _IVFPQ_APPEND_CACHE:
-        base = _emb_double(spark, sf_dir).filter(F.col("vec_id") != 0)
-        X = sample_vectors(base)
-        assigned, centroids = build_ivf(base, n_clusters=8, sample_X=X)
-        books = build_pq(base, m=8, k=16, sample_X=X)
-        enc = pq_encode(base, books)
-        path = scratch_path("ivfpq_append_" + key.replace("/", "_"))
-        write_ivfpq_index(assigned, enc, centroids, books, path)
+    def build(path):
+        _write_ivfpq(_emb_double(spark, sf_dir).filter(F.col("vec_id") != 0), path)
         index, _ = _planted_query_index(spark, sf_dir)
         append_ivfpq_index(index.filter(F.col("vec_id") >= _PLANT_BASE), path)
-        _IVFPQ_APPEND_CACHE[key] = path
-    return read_ivfpq_index(spark, _IVFPQ_APPEND_CACHE[key])
+        return path
+
+    path = build_once(spark, sf_dir, ("embeddings",), "ivfpq_append", build)
+    return read_ivfpq_index(spark, path)
 
 
 @register("ann_ivfpq_append_probe", oracle=_ANN_TOPK_ORACLE)
@@ -1902,25 +1845,20 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _incr_probe(newb, hsh, hsz, hot)
 
 
-# sf_dir -> persisted shingle-index table names; the index build +
-# bucketed write happen once per process (gate/bench warmup pays them),
-# so repeated probes measure ONLY the daily read path — exactly how the
-# index amortizes in production.
-_SHINGLE_IDX_CACHE: dict[str, tuple[str, str, str]] = {}
-
-
 def _ensure_shingle_index(spark: SparkSession, sf_dir: str):
+    """Table names of the persisted historical shingle index, named
+    after the store's per-key scratch directory."""
     import os
 
     from ..operators.shingle_index import write_shingle_index
 
-    key = os.path.abspath(sf_dir)
-    if key not in _SHINGLE_IDX_CACHE:
+    def build(path):
         hist, _ = _incr_hist_newb(spark, sf_dir)
-        _SHINGLE_IDX_CACHE[key] = write_shingle_index(
-            spark, _bigram_rows(hist), cap=_INCR_CAP, key=key
+        return write_shingle_index(
+            spark, _bigram_rows(hist), cap=_INCR_CAP, key=os.path.basename(path)
         )
-    return _SHINGLE_IDX_CACHE[key]
+
+    return build_once(spark, sf_dir, ("documents",), "shingle_idx", build)
 
 
 @register("dedup_incremental_indexed", oracle=_INCR_ORACLE)

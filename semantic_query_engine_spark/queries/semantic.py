@@ -386,9 +386,9 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     double accumulation anywhere, so shuffle order cannot move a bit;
     consumers divide by n downstream.
 
-    Scale shape (round-13 rework; the pre-rework dim-exploded-join
-    plan is kept verbatim in tools/drift_shuffle_ab.py as the A/B
-    baseline): the two snapshots join on vec_id at ARRAY level — one
+    Scale shape (round-13 rework; the A/B against the pre-rework
+    dim-exploded-join plan is in SCALE.md, "Round 13: embedding_drift
+    array-level join"): the two snapshots join on vec_id at ARRAY level — one
     4-8 KB vector payload per side per vector rides the exchange —
     then zip_with pairs the components row-locally and posexplode
     feeds the dim-keyed combining agg, whose map-side partials shrink

@@ -1,11 +1,11 @@
 """Per-process scratch directories under `<repo>/.scratch` (ADVICE r9).
 
 `tempfile.mkdtemp` under /tmp leaked one directory per bench/gate
-process per sf_dir (the IVF/IVF-PQ layout caches in queries/dedup_q.py,
-the streaming checkpoint dirs in queries/streaming_q.py, and
-tools/scale_ann_probe.py) — repeated invocations accumulated orphaned
-parquet trees nothing ever removed.  This helper replaces those with a
-fixed, gitignored per-repo location:
+process per sf_dir (the build-once index layouts of
+sources/fixtures.build_once, the streaming checkpoint dirs in
+queries/streaming_q.py, and tools/scale_ann_probe.py) — repeated
+invocations accumulated orphaned parquet trees nothing ever removed.
+This helper replaces those with a fixed, gitignored per-repo location:
 
     .scratch/<pid>-<starttime>/<name>
 
@@ -56,10 +56,10 @@ _registered = False
 def scratch_path(name: str) -> str:
     """Create (if needed) and return `.scratch/<pid>/<name>`.
 
-    `name` is sanitized to a single path component; callers that key a
-    per-process cache by sf_dir should fold the key into the name
-    (e.g. ``scratch_path(f"ivf_layout_{key}")``).  The whole pid subtree
-    is removed at interpreter exit.
+    `name` is sanitized to a single path component; build-once state
+    gets a name derived from its cache key from
+    sources/fixtures.build_once.  The whole pid subtree is removed at
+    interpreter exit.
     """
     global _registered
     if not _registered:

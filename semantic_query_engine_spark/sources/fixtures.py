@@ -9,10 +9,16 @@ at rest, an upgrade over the reference's row-oriented OpenSearch docs.
 
 from __future__ import annotations
 
+import hashlib
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..scratch import scratch_path
+
+_T = TypeVar("_T")
 
 TABLES = (
     "region",
@@ -95,6 +101,41 @@ def load_table(
         df = _spread_scan(spark, df, path)
     _PLAN_CACHE[key] = df
     return df
+
+
+_BUILT: dict[tuple, object] = {}
+
+
+def build_once(
+    spark: SparkSession,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    name: str,
+    build: Callable[[str], _T],
+) -> _T:
+    """Build-once state derived from fixture tables: persisted ANN
+    layouts, codebooks, shingle indexes.  `build(path)` runs on the first
+    call for a key and its result is returned to every later call, so a
+    bench/gate warmup pays the build and the timed runs probe only — the
+    build-once/probe-many cost model of the reference's HNSW index
+    (/root/reference/app/main.py:262-283).
+
+    The key is what load_table's plan cache keys on: the session, the
+    absolute fixture path, and the (mtime, size) stamp of every table
+    in `tables` (the tables the build reads), so a fixture regenerated
+    at the same path gets a fresh build instead of a stale index.
+    `path` is a scratch directory derived from that key: a rebuild
+    writes next to the old layout, never over files an earlier plan
+    still reads."""
+    sf = os.path.abspath(sf_dir)
+    stamps = tuple(
+        _file_stamp(os.path.join(sf, f"{t}.parquet")) for t in tables
+    )
+    key = (id(spark), sf, name, stamps)
+    if key not in _BUILT:
+        digest = hashlib.sha1(repr(key).encode()).hexdigest()[:16]
+        _BUILT[key] = build(scratch_path(f"{name}_{digest}"))
+    return _BUILT[key]
 
 
 # Tables whose on-disk footprint is below this are left unspread: a
