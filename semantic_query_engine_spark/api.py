@@ -15,7 +15,17 @@ Reference endpoints -> methods:
 
 State:
 - chunk index: a DataFrame (persist via plans.index_build.write_index);
-  retrieval over it is a Spark plan
+  retrieval over it is one Spark job.  The index is a cached base,
+  spread to at least the session's core count and carrying a
+  precomputed `embedding_norm`, unioned with an upload delta that
+  upload_text chunks, embeds and materializes when the file arrives
+  (as the reference indexes an upload at /upload_text,
+  app/embedding_gen.py:315-409).  Both sides are in-memory scans, so an
+  ask miss runs no MLlib stage or Python worker and its plan does not
+  grow with uploads.  Left lazy, every ask re-chunked and re-embedded
+  every upload, ~430 ms more per upload on each later search (4
+  cores: 465 ms with no uploads, 2,170 ms after 4); the base was
+  scored on one core, as a 5,000-document corpus is one split.
 - query embedding (A6) and semantic LFU cache (A12-A14): on the driver,
   so a cache-hit ask runs no Spark job.  Both are per-ask work on one
   text and <= capacity entries, and the reference scans its cache
@@ -35,7 +45,8 @@ from typing import Iterator, Optional
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.vectors import cosine, vector_lit
+from .functions.plan import truncate_eager
+from .functions.vectors import cosine_to_const, l2_norm
 from .ml.embedder import TfIdfEmbedder
 from .operators import cache as cache_ops
 from .operators.chunking import chunk_documents
@@ -72,6 +83,8 @@ class SemanticQueryEngine:
         # back to word-chunking the completed answer
         self.generate_stream = generate_stream_fn
         self.index: Optional[DataFrame] = None
+        self._base: Optional[DataFrame] = None  # cached build output
+        self._uploads: Optional[DataFrame] = None  # materialized delta
         self._embedder: Optional[TfIdfEmbedder] = None
         self._cache = cache_ops.SemanticCache(cache_capacity, cache_threshold)
         # A21 — initialized, unlike the reference (app/main.py:408-411)
@@ -98,7 +111,14 @@ class SemanticQueryEngine:
         self._embedder = TfIdfEmbedder(
             dim=self.dim, text_col="chunk_text", out_col="embedding"
         ).fit(chunks)
-        self.index = self._embedder.transform(chunks).cache()
+        cores = self.spark.sparkContext.defaultParallelism
+        if chunks.rdd.getNumPartitions() < cores:
+            # a small corpus is one unsplittable split: spread it so
+            # scoring uses every core (as sources.fixtures._spread_scan)
+            chunks = chunks.repartition(cores)
+        self._base = self._embed(chunks).cache()
+        self._uploads = None
+        self.index = self._base
         return self
 
     def build_from_corpus_dir(self, corpus_dir: str) -> "SemanticQueryEngine":
@@ -117,28 +137,37 @@ class SemanticQueryEngine:
             raise ValueError("only .txt uploads are accepted")
         stem = filename[: -len(".txt")]
         doc_id = f"{stem}_{batch_ts}"
-        docs = self.spark.createDataFrame(
-            [(doc_id, content, user_id)], "doc_id string, text string, user_id string"
+        docs = self.spark.range(1, numPartitions=1).select(
+            F.lit(doc_id).alias("doc_id"), F.lit(content).alias("text")
         )
         chunks = chunk_documents(docs, chunk_size=self.chunk_size)
         if self._embedder is None:
             self._embedder = TfIdfEmbedder(
                 dim=self.dim, text_col="chunk_text", out_col="embedding"
             ).fit(chunks)
-        embedded = self._embedder.transform(chunks).withColumn(
-            "user_id", F.lit(user_id)
-        )
-        base = self.index
-        if base is not None and dict(base.dtypes)["doc_id"] != "string":
+        delta = self._embed(chunks).withColumn("user_id", F.lit(user_id))
+        if self._uploads is not None:
+            delta = self._uploads.unionByName(delta)
+        # one job per upload, over the uploads only: the ask path then
+        # scans the delta instead of re-running chunk + embed per upload;
+        # one partition, so an ask's task count does not grow either
+        self._uploads = delta.coalesce(1).transform(truncate_eager)
+        base = self._base
+        if base is None:
+            self.index = self._uploads
+            return doc_id
+        if dict(base.dtypes)["doc_id"] != "string":
             # upload ids are strings; unionByName would cast them to the
             # index's type instead (CAST_INVALID_INPUT on the next read)
             base = base.withColumn("doc_id", F.col("doc_id").cast("string"))
-        self.index = (
-            embedded
-            if base is None
-            else base.unionByName(embedded, allowMissingColumns=True)
-        )
+        self.index = base.unionByName(self._uploads, allowMissingColumns=True)
         return doc_id
+
+    def _embed(self, chunks: DataFrame) -> DataFrame:
+        """Chunk rows -> embedding plus its precomputed L2 norm."""
+        return self._embedder.transform(chunks).withColumn(
+            "embedding_norm", l2_norm("embedding")
+        )
 
     # ------------------------------------------------------------------
     # Read path (A20 / A26 / A15)
@@ -158,10 +187,13 @@ class SemanticQueryEngine:
 
     def search(self, query: str, k: int = DEFAULT_TOP_K) -> DataFrame:
         """A15: top-k chunks for a text query."""
-        qvec = self._embed_query(query)
-        index = self._require_index()
-        scored = index.withColumn(
-            "score", cosine(F.col("embedding"), vector_lit(qvec))
+        return self._retrieve(self._embed_query(query), k)
+
+    def _retrieve(self, qvec: list[float], k: int) -> DataFrame:
+        """Top-k chunks by cosine to an embedded query, ties to the
+        lowest chunk_key: one job over the in-memory index."""
+        scored = self._require_index().withColumn(
+            "score", cosine_to_const("embedding", "embedding_norm", qvec)
         )
         return (
             scored.orderBy(F.desc("score"), F.asc("chunk_key"))
@@ -211,7 +243,7 @@ class SemanticQueryEngine:
         cached = self._cache_probe(qvec)
         if cached is not None:
             return cached
-        hits = self.search(query, top_k).collect()
+        hits = self._retrieve(qvec, top_k).collect()
         context = self._assemble_context(hits)
         history = ""
         if chat_id is not None:
@@ -247,7 +279,7 @@ class SemanticQueryEngine:
         if cached is not None:
             yield cached
             return
-        hits = self.search(query, top_k).collect()
+        hits = self._retrieve(qvec, top_k).collect()
         prompt = self._build_prompt(query, self._assemble_context(hits), "")
         if self.generate_stream is not None:
             parts: list[str] = []

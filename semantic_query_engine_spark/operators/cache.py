@@ -30,13 +30,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import fold_dot
+
 CACHE_CAPACITY = 1000  # /root/reference/app/main.py:42
 CACHE_SIM_THRESHOLD = 0.96  # /root/reference/app/main.py:44
-
-
-def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Row-wise a.b summed left to right, as Spark's aggregate does."""
-    return np.cumsum(a * b, axis=-1)[..., -1]
 
 
 class SemanticCache:
@@ -62,12 +59,12 @@ class SemanticCache:
         if not self.response:
             return None
         q = np.asarray(query_vec, dtype=np.float64)
-        qn = np.sqrt(_fold_dot(q, q))
+        qn = np.sqrt(fold_dot(q, q))
         with np.errstate(divide="ignore", invalid="ignore"):
             score = np.where(
                 (self.norm == 0.0) | (qn == 0.0),
                 0.0,
-                _fold_dot(self.embedding, q) / (self.norm * qn),
+                fold_dot(self.embedding, q) / (self.norm * qn),
             )
         best = np.flatnonzero(score == score.max())
         hit = best[np.argmin(self.entry_id[best])]
@@ -93,7 +90,7 @@ class SemanticCache:
             self.embedding[slot] = vec
             self.response[slot] = response
         self._last_id += 1
-        self.norm[slot] = np.sqrt(_fold_dot(vec, vec))
+        self.norm[slot] = np.sqrt(fold_dot(vec, vec))
         self.entry_id[slot] = self._last_id
         self.freq[slot] = 1
 

@@ -144,6 +144,32 @@ def test_cache_hit_ask_and_stats_run_no_spark_job(spark, engine):
     assert sc.statusTracker().getJobIdsForGroup("control")
 
 
+def _assert_search_matches_cosine_column(eng, queries):
+    """`search` returns the rows and the exact float scores of the plain
+    cosine() form, over the whole index (k = every row)."""
+    from semantic_query_engine_spark.functions.vectors import cosine, vector_lit
+
+    n = eng.index.count()
+    scored = False
+    for q in queries:
+        want = (
+            eng.index.withColumn(
+                "score", cosine(F.col("embedding"), vector_lit(eng._embed_query(q)))
+            )
+            .orderBy(F.desc("score"), F.asc("chunk_key"))
+            .limit(n)
+            .select("doc_id", "chunk_id", "chunk_key", "chunk_text", "score")
+            .collect()
+        )
+        got = eng.search(q, n).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], repr(q)
+        scored = scored or any(r.score > 0.0 for r in got)
+    assert scored  # the queries reach the index's vocabulary
+
+
+QUERIES = ["fast key order sort table", "stream window watermark", ""]
+
+
 def test_upload_into_integer_doc_id_index_is_searchable(spark):
     from semantic_query_engine_spark.api import SemanticQueryEngine
 
@@ -160,3 +186,67 @@ def test_upload_into_integer_doc_id_index_is_searchable(spark):
     assert {r.doc_id for r in eng.index.select("doc_id").collect()} == {
         "0", "1", "2", "3", doc_id
     }
+    _assert_search_matches_cosine_column(eng, QUERIES)
+
+
+def test_search_bit_identical_to_cosine_column(engine):
+    _assert_search_matches_cosine_column(engine, QUERIES)
+
+
+def _executed_nodes(df) -> list[str]:
+    """One line per node of the executed plan, not descending into a
+    cached relation's own plan (that ran once, at cache fill)."""
+    out = []
+
+    def walk(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        out.append(node.simpleString(10_000))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_ask_miss_after_uploads_is_one_job_over_a_constant_plan(spark, sf_dir):
+    """Uploads are indexed when they arrive: a miss scores two in-memory
+    scans (cached base, materialized upload delta) with no chunking
+    (Generate), MLlib UDF or Python evaluation, in one Spark job, and
+    the plan does not grow with the number of uploads."""
+    import re
+
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+    from semantic_query_engine_spark.sources.fixtures import load_table
+
+    docs = load_table(spark, sf_dir, "documents").limit(50).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(docs)
+    eng.search("fill the index cache").collect()
+
+    def shape():
+        nodes = _executed_nodes(eng.search("stream window watermark"))
+        for node in nodes:
+            assert not node.startswith("Generate"), node
+            assert "Python" not in node.split(" ")[0], node
+            assert "UDF(" not in node, node
+        # expression ids and constants vary; the structure must not
+        return re.sub(r"\d+", "0", "\n".join(nodes))
+
+    eng.upload_text("t0", "up0.txt", "stream window watermark part 0", 0)
+    after_first = shape()
+    eng.upload_text("t1", "up1.txt", "stream window watermark part 1", 1)
+    eng.upload_text("t2", "up2.txt", "stream window watermark part 2", 2)
+    assert len(shape()) <= len(after_first)
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("ask-miss", "cache-miss ask after uploads")
+        eng.ask("a distinct miss about stream windows")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert eng.cache_stats()["entries"] == 1  # a miss: the answer was put
+    assert len(sc.statusTracker().getJobIdsForGroup("ask-miss")) == 1
+    _assert_search_matches_cosine_column(eng, QUERIES)

@@ -59,3 +59,23 @@ def test_requeue_still_poisoned_keeps_faster_upper_bound():
     t, frac = bench._merge_requeue(2.0, 0.06, 4.0, 0.19)
     assert t == 2.0
     assert frac == 0.19
+
+
+def test_requeue_failure_keeps_the_poisoned_row_and_goes_on():
+    # a failed retry child (run_group -> None) keeps that row's original
+    # median, still stamped; the next row's retry is still merged
+    timings = {"a": 5.61, "b": 2.0, "c": 1.5}
+    poisoned = {"a": 0.13, "b": 0.06}
+    calls = []
+
+    def run_group(group):
+        calls.append(group)
+        if group == ["a"]:
+            return None
+        return {"timings": {"b": 1.2}, "steal_retakes": 2, "steal_worst": 0.04}
+
+    requeued, retakes, worst = bench._requeue_poisoned(timings, poisoned, run_group)
+    assert calls == [["a"], ["b"]]
+    assert timings == {"a": 5.61, "b": 1.2, "c": 1.5}
+    assert poisoned == {"a": 0.13}
+    assert (requeued, retakes, worst) == (1, 2, 0.04)

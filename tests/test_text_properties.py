@@ -15,8 +15,10 @@ from pyspark.sql import types as T
 
 from semantic_query_engine_spark.functions.vectors import (
     cosine,
+    cosine_to_const,
     l2_norm,
     l2_normalize,
+    vector_lit,
     with_cosine,
 )
 from semantic_query_engine_spark.operators.chunking import chunk_documents
@@ -101,6 +103,26 @@ def test_with_cosine_accepts_precomputed_norm_named_like_a_temp(spark):
     assert abs(by_id[1] - 1.0) < 1e-12 and by_id[2] == 0.0
     with pytest.raises(ValueError, match="__score_norm_b"):
         with_cosine(df, "a", "b", "score")
+
+
+@pytest.mark.filterwarnings("ignore:overflow:RuntimeWarning")
+def test_cosine_to_const_bit_identical_to_cosine(spark):
+    """The one-SQL-string form against a constant equals cosine() with
+    the constant as vector_lit, bit for bit: zero rows and a zero
+    constant hit the guard, negative components fold in order."""
+    df = spark.createDataFrame(
+        [(1, [3.0, -4.0, 0.1]), (2, [0.0, 0.0, 0.0]), (3, [-1.5, 2.25, -1e-7])],
+        "id long, v array<float>",
+    ).withColumn("n", l2_norm("v"))
+    for q in ([0.3, -0.7, 1e-3], [0.0, 0.0, 0.0], [-2.0, 5.5, -0.25]):
+        got = df.select("id", cosine_to_const("v", "n", q).alias("s"))
+        want = df.select("id", cosine("v", vector_lit(q)).alias("s"))
+        assert got.orderBy("id").collect() == want.orderBy("id").collect(), q
+    assert {r.s for r in got.filter("id = 2").collect()} == {0.0}
+    for bad in ([1.0, float("inf"), 0.0], [float("nan"), 0.0, 0.0], [1e200, 1e200, 0.0]):
+        # the last is finite, but its norm is not
+        with pytest.raises(ValueError, match="non-finite"):
+            cosine_to_const("v", "n", bad)
 
 
 def test_overlap_chunking_invariants(spark):
